@@ -18,20 +18,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: Tables the driver materializes per TESTDATA.md.
-DRIVER_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 
 def _nanos_timestamp_cols(path: str) -> list[str]:
     """Columns stored as parquet TIMESTAMP(NANOS) — Spark cannot read
@@ -96,11 +82,6 @@ class Catalog:
     def register(self, name: str, df: DataFrame) -> None:
         """Register a model output so downstream models can ``ref()`` it."""
         self._registered[name] = df
-
-    def register_views(self, names: tuple[str, ...] = DRIVER_TABLES) -> None:
-        """Create temp views for SQL-API access to every driver table."""
-        for name in names:
-            self.table(name).createOrReplaceTempView(name)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -76,7 +76,7 @@ def q421_delta_log_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
     from product_analytics_spark.sources.sinks import SnapshotStore
 
     shutil.rmtree(Q421_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q421_WH, retain_versions=8, delta_log=True)
+    store = SnapshotStore(spark, Q421_WH, retain_versions=8)
     base = _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("k"),
         F.col("c_mktsegment").alias("seg"),
@@ -232,7 +232,7 @@ def q422_delta_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     from product_analytics_spark.sources.sinks import SnapshotStore
 
     shutil.rmtree(Q422_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q422_WH, retain_versions=1, delta_log=True)
+    store = SnapshotStore(spark, Q422_WH, retain_versions=1)
     grid = _t(spark, sf_dir, "customer").select(
         (F.col("c_custkey") % 32).alias("x"),
         ((F.col("c_custkey") / 32).cast("long") % 32).alias("y"),
@@ -376,7 +376,7 @@ def q423_delta_checkpoint_replay(
     from product_analytics_spark.sources.sinks import SnapshotStore
 
     shutil.rmtree(Q423_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q423_WH, retain_versions=3, delta_log=True)
+    store = SnapshotStore(spark, Q423_WH, retain_versions=3)
     base = (
         _t(spark, sf_dir, "customer")
         .select(

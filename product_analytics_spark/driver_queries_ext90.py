@@ -428,7 +428,7 @@ def q426_advised_equal_depth_zorder(
     from product_analytics_spark.sources.sinks import SnapshotStore
 
     shutil.rmtree(Q426_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q426_WH, delta_log=True)
+    store = SnapshotStore(spark, Q426_WH)
     grid = (
         _t(spark, sf_dir, "customer")
         .selectExpr("c_custkey AS k")
@@ -705,7 +705,7 @@ def q428_delta_log_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     # VACUUM has real tombstoned files to delete — exactly the v9 live
     # set (v10's COW rewrite re-adds every path under its own dir),
     # which the oracle recomputes as the checkpoint's file count.
-    store = SnapshotStore(spark, Q428_WH, retain_versions=2, delta_log=True)
+    store = SnapshotStore(spark, Q428_WH, retain_versions=2)
     base = (
         _t(spark, sf_dir, "customer")
         .select(
@@ -831,7 +831,7 @@ def q429_delta_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from product_analytics_spark.sources.sinks import SnapshotStore
 
     shutil.rmtree(Q429_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q429_WH, retain_versions=8, delta_log=True)
+    store = SnapshotStore(spark, Q429_WH, retain_versions=8)
     base = _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("k"),
         _money_cents("c_acctbal").alias("cents"),

@@ -204,7 +204,7 @@ Q433_WH = os.path.join(_REPO, ".fixtures", ".q433_warehouse")
 def q433_delta_dv_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Protocol-v3 deletion vectors in the transaction log, certified
     cross-engine — the round-8 verdict's one carried ``weak`` gate
-    lifted: the MoR DML trio now runs under ``delta_log=True``, each
+    lifted: the MoR DML trio now commits through the delta log, each
     commit emitting real ``deletionVector`` descriptors (Z85 uuid,
     roaring-bitmap sidecar ``deletion_vector_<uuid>.bin``, offset/
     sizeInBytes/cardinality — sources/deletion_vectors.py), the
@@ -234,7 +234,7 @@ def q433_delta_dv_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
     from product_analytics_spark.sources.sinks import SnapshotStore
 
     shutil.rmtree(Q433_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q433_WH, retain_versions=8, delta_log=True)
+    store = SnapshotStore(spark, Q433_WH, retain_versions=8)
     base = _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("k"),
         F.col("c_mktsegment").alias("seg"),

@@ -88,7 +88,7 @@ def q434_cdf_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     shutil.rmtree(Q434_WH, ignore_errors=True)
     store = SnapshotStore(
-        spark, Q434_WH, retain_versions=10, delta_log=True, cdf=True
+        spark, Q434_WH, retain_versions=10, cdf=True
     )
     base = _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("k"),
@@ -266,7 +266,7 @@ def q435_restore_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     from product_analytics_spark.sources.sinks import SnapshotStore
 
     shutil.rmtree(Q435_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q435_WH, retain_versions=10, delta_log=True)
+    store = SnapshotStore(spark, Q435_WH, retain_versions=10)
     cust = _t(spark, sf_dir, "customer")
     base = cust.select(
         F.col("c_custkey").alias("k"),
@@ -405,7 +405,7 @@ def q436_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     shutil.rmtree(Q436_WH, ignore_errors=True)
     shutil.rmtree(Q436_CLONE, ignore_errors=True)
-    store = SnapshotStore(spark, Q436_WH, retain_versions=4, delta_log=True)
+    store = SnapshotStore(spark, Q436_WH, retain_versions=4)
     base = _t(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("k"),
         F.col("s_nationkey").cast("long").alias("nation"),
@@ -543,7 +543,7 @@ def q437_delta_tail_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from product_analytics_spark.sources.sinks import SnapshotStore
 
     shutil.rmtree(Q437_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q437_WH, retain_versions=10, delta_log=True)
+    store = SnapshotStore(spark, Q437_WH, retain_versions=10)
     cust = _t(spark, sf_dir, "customer")
     base = cust.select(
         F.col("c_custkey").alias("k"),
@@ -713,7 +713,7 @@ def q438_check_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     shutil.rmtree(Q438_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q438_WH, retain_versions=5, delta_log=True)
+    store = SnapshotStore(spark, Q438_WH, retain_versions=5)
     cust = _t(spark, sf_dir, "customer")
     base = cust.select(
         F.col("c_custkey").alias("k"),
@@ -857,7 +857,7 @@ def q439_column_mapping_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     from product_analytics_spark.sources.sinks import SnapshotStore
 
     shutil.rmtree(Q439_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q439_WH, retain_versions=5, delta_log=True)
+    store = SnapshotStore(spark, Q439_WH, retain_versions=5)
     base = _t(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("k"),
         F.col("s_nationkey").cast("long").alias("nation"),
@@ -978,7 +978,7 @@ def q440_history_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from product_analytics_spark.sources.sinks import SnapshotStore
 
     shutil.rmtree(Q440_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q440_WH, retain_versions=8, delta_log=True)
+    store = SnapshotStore(spark, Q440_WH, retain_versions=8)
     cust = _t(spark, sf_dir, "customer")
     base = cust.select(
         F.col("c_custkey").alias("k"),
@@ -1114,7 +1114,7 @@ def q441_cdf_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     shutil.rmtree(Q441_WH, ignore_errors=True)
     store = SnapshotStore(
-        spark, Q441_WH, retain_versions=10, delta_log=True, cdf=True
+        spark, Q441_WH, retain_versions=10, cdf=True
     )
     cust = _t(spark, sf_dir, "customer")
     base = cust.select(
@@ -1272,7 +1272,7 @@ def q442_generated_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     shutil.rmtree(Q442_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q442_WH, retain_versions=5, delta_log=True)
+    store = SnapshotStore(spark, Q442_WH, retain_versions=5)
     store.set_generated(
         "ord", "order_month", "date_format(order_date, 'yyyy-MM')"
     )
@@ -1405,7 +1405,7 @@ def q443_identity_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     shutil.rmtree(Q443_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q443_WH, retain_versions=5, delta_log=True)
+    store = SnapshotStore(spark, Q443_WH, retain_versions=5)
     store.set_identity("dim", "sk", start=1000, step=1)
     cust = _t(spark, sf_dir, "customer")
     base = cust.select(
@@ -1554,7 +1554,7 @@ def q444_writer_features_composed(
       X401),
     * a CHECK constraint (``cents >= -100000000``, X397),
     * Change Data Feed on (``cdf=True``, X393),
-    all under ``delta_log=True``.
+    all committed through the delta log.
 
     Then two incremental merges (updates + late arrivals) and one
     violating batch, and the cert pins the INTERACTIONS — the part
@@ -1591,7 +1591,7 @@ def q444_writer_features_composed(
 
     shutil.rmtree(Q444_WH, ignore_errors=True)
     store = SnapshotStore(
-        spark, Q444_WH, retain_versions=10, delta_log=True, cdf=True
+        spark, Q444_WH, retain_versions=10, cdf=True
     )
     store.set_identity("dim", "sk", start=1, step=1)
     store.set_generated("dim", "grp", "concat('g', CAST(nk % 4 AS STRING))")
@@ -1809,7 +1809,7 @@ def q445_delta_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     from product_analytics_spark.sources.sinks import SnapshotStore
 
     shutil.rmtree(Q445_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q445_WH, retain_versions=8, delta_log=True)
+    store = SnapshotStore(spark, Q445_WH, retain_versions=8)
     cust = _t(spark, sf_dir, "customer")
     base = cust.select(
         F.col("c_custkey").alias("k"),

@@ -97,8 +97,7 @@ def q446_checkpoint_v2_sidecars(
     from product_analytics_spark.sources.sinks import SnapshotStore
 
     shutil.rmtree(Q446_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q446_WH, retain_versions=10,
-                          delta_log=True)
+    store = SnapshotStore(spark, Q446_WH, retain_versions=10)
     cust = _t(spark, sf_dir, "customer")
     base = cust.select(
         F.col("c_custkey").alias("k"),
@@ -288,8 +287,7 @@ def q447_row_tracking(spark: SparkSession, sf_dir: str) -> DataFrame:
     from product_analytics_spark.sources.sinks import SnapshotStore
 
     shutil.rmtree(Q447_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q447_WH, retain_versions=10,
-                          delta_log=True)
+    store = SnapshotStore(spark, Q447_WH, retain_versions=10)
     cust = _t(spark, sf_dir, "customer")
     base = cust.select(
         F.col("c_custkey").alias("k"),
@@ -502,7 +500,7 @@ def q448_cdf_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     shutil.rmtree(Q448_WH, ignore_errors=True)
     store = SnapshotStore(
-        spark, Q448_WH, retain_versions=10, delta_log=True, cdf=True
+        spark, Q448_WH, retain_versions=10, cdf=True
     )
     cust = _t(spark, sf_dir, "customer")
     base = cust.select(
@@ -642,8 +640,7 @@ def q449_in_commit_timestamps(
     from product_analytics_spark.sources.sinks import SnapshotStore
 
     shutil.rmtree(Q449_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q449_WH, retain_versions=8,
-                          delta_log=True)
+    store = SnapshotStore(spark, Q449_WH, retain_versions=8)
     cust = _t(spark, sf_dir, "customer")
     base = cust.select(
         F.col("c_custkey").alias("k"),
@@ -774,8 +771,7 @@ def q450_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     from product_analytics_spark.sources.sinks import SnapshotStore
 
     shutil.rmtree(Q450_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q450_WH, retain_versions=8,
-                          delta_log=True)
+    store = SnapshotStore(spark, Q450_WH, retain_versions=8)
     cust = _t(spark, sf_dir, "customer")
     base = cust.select(
         F.col("c_custkey").alias("k"),
@@ -927,8 +923,7 @@ def q451_liquid_clustering(
     from product_analytics_spark.sources.sinks import SnapshotStore
 
     shutil.rmtree(Q451_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q451_WH, retain_versions=8,
-                          delta_log=True)
+    store = SnapshotStore(spark, Q451_WH, retain_versions=8)
     cust = _t(spark, sf_dir, "customer")
     base = cust.select(
         F.col("c_custkey").alias("k"),

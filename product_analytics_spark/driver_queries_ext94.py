@@ -99,8 +99,7 @@ def q454_shallow_clone_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     shutil.rmtree(Q454_WH, ignore_errors=True)
     shutil.rmtree(Q454_CLONE, ignore_errors=True)
-    store = SnapshotStore(spark, Q454_WH, retain_versions=6,
-                          delta_log=True)
+    store = SnapshotStore(spark, Q454_WH, retain_versions=6)
     base = _t(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("k"),
         F.col("s_nationkey").cast("long").alias("nation"),
@@ -236,8 +235,7 @@ def q455_protocol_safety(spark: SparkSession, sf_dir: str) -> DataFrame:
     from product_analytics_spark.sources.sinks import SnapshotStore
 
     shutil.rmtree(Q455_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q455_WH, retain_versions=8,
-                          delta_log=True)
+    store = SnapshotStore(spark, Q455_WH, retain_versions=8)
     base = _t(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("k"),
         F.col("s_nationkey").cast("long").alias("nation"),

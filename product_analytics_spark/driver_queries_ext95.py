@@ -101,8 +101,7 @@ def q459_append_only_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     shutil.rmtree(Q459_WH, ignore_errors=True)
     shutil.rmtree(Q459_FOREIGN, ignore_errors=True)
-    store = SnapshotStore(spark, Q459_WH, retain_versions=6,
-                          delta_log=True)
+    store = SnapshotStore(spark, Q459_WH, retain_versions=6)
     base = _t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
         F.col("o_custkey").cast("long").alias("cust"),
@@ -582,8 +581,7 @@ def q461_stream_byte_admission(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # ---- arm 2: end-to-end completeness under a 1-byte budget
     shutil.rmtree(Q461_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q461_WH, retain_versions=10,
-                          delta_log=True)
+    store = SnapshotStore(spark, Q461_WH, retain_versions=10)
     cust = _t(spark, sf_dir, "customer")
     base = cust.select(
         F.col("c_custkey").alias("k"),
@@ -1158,8 +1156,7 @@ def q464_generated_partition_pruning(
     from product_analytics_spark.sources.sinks import SnapshotStore
 
     shutil.rmtree(Q464_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q464_WH, retain_versions=3,
-                          delta_log=True)
+    store = SnapshotStore(spark, Q464_WH, retain_versions=3)
     base = _t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
         F.col("o_orderdate").alias("odate"),
@@ -1291,9 +1288,8 @@ def q476_round12_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     wrote parquet into the current data dir BEFORE the log commit,
     so a coordinator-refused append left orphaned files the next
     writer's disk-minus-log reconcile silently ADOPTED — committing
-    rows a writer was just told it could not commit. The append
-    path now fail-fasts on the coordinator declaration before any
-    byte lands (``_assert_coordinator_routed``).
+    rows a writer was just told it could not commit. A refused
+    append now removes the files it wrote before it raises.
 
     Scale: this is the production stack — a catalog-owned,
     append-only, generated-partitioned fact table with declared
@@ -1313,8 +1309,7 @@ def q476_round12_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     from product_analytics_spark.sources.sinks import SnapshotStore
 
     shutil.rmtree(Q476_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q476_WH, retain_versions=10,
-                          delta_log=True)
+    store = SnapshotStore(spark, Q476_WH, retain_versions=10)
     base = _t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
         F.col("o_orderdate").alias("odate"),
@@ -1351,7 +1346,7 @@ def q476_round12_capstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     except dl.DeltaProtocolError:
         fs_refused = dl.DeltaLog(tdir).latest_version() == v_decl
     coord_store = SnapshotStore(
-        spark, Q476_WH, retain_versions=10, delta_log=True,
+        spark, Q476_WH, retain_versions=10,
         commit_owner=dl.StagedCommitOwner(coordinator_name=COORD),
     )
     coord_store.append("fact", base.where(F.col("k") % 4 == 3),
@@ -1660,8 +1655,7 @@ def q474_auto_optimize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from product_analytics_spark.sources.sinks import SnapshotStore
 
     shutil.rmtree(Q474_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q474_WH, retain_versions=5,
-                          delta_log=True)
+    store = SnapshotStore(spark, Q474_WH, retain_versions=5)
     cust = _t(spark, sf_dir, "customer")
     base = cust.select(
         F.col("c_custkey").alias("k"),
@@ -1830,8 +1824,7 @@ def q472_optimize_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     from product_analytics_spark.sources.sinks import SnapshotStore
 
     shutil.rmtree(Q472_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q472_WH, retain_versions=5,
-                          delta_log=True)
+    store = SnapshotStore(spark, Q472_WH, retain_versions=5)
     cust = _t(spark, sf_dir, "customer")
     base = cust.select(
         F.col("c_custkey").alias("k"),
@@ -2531,8 +2524,7 @@ def q469_vacuum_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # ---- arm 1: real store with a planted orphan
     shutil.rmtree(Q469_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q469_WH, retain_versions=10,
-                          delta_log=True)
+    store = SnapshotStore(spark, Q469_WH, retain_versions=10)
     base = _t(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("k"),
         F.col("s_nationkey").cast("long").alias("nation"),
@@ -2711,8 +2703,7 @@ def q468_drop_feature(spark: SparkSession, sf_dir: str) -> DataFrame:
     from product_analytics_spark.sources.sinks import SnapshotStore
 
     shutil.rmtree(Q468_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q468_WH, retain_versions=10,
-                          delta_log=True)
+    store = SnapshotStore(spark, Q468_WH, retain_versions=10)
     base = _t(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("k"),
         F.col("p_brand").alias("brand"),
@@ -2892,8 +2883,7 @@ def q467_nested_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     shutil.rmtree(Q467_WH, ignore_errors=True)
-    store = SnapshotStore(spark, Q467_WH, retain_versions=5,
-                          delta_log=True)
+    store = SnapshotStore(spark, Q467_WH, retain_versions=5)
     cust = _t(spark, sf_dir, "customer")
     base = cust.select(
         F.col("c_custkey").alias("k"),
@@ -3100,7 +3090,7 @@ def q466_cdf_stream_admission(
 
     shutil.rmtree(Q466_WH, ignore_errors=True)
     store = SnapshotStore(spark, Q466_WH, retain_versions=10,
-                          delta_log=True, cdf=True)
+                          cdf=True)
     cust = _t(spark, sf_dir, "customer")
     base = cust.select(
         F.col("c_custkey").alias("k"),

@@ -102,12 +102,6 @@ def clamp_money(
     return expr.otherwise(round_money(col, scale))
 
 
-def guarded_div(num: Column, denom: Column, default: float = 0.0, scale: int | None = 4) -> Column:
-    """num/denom with divide-by-zero guard (reference: dim_customer.sql:166-170)."""
-    out = F.when(denom > 0, num / denom).otherwise(F.lit(default))
-    return F.round(out, scale) if scale is not None else out
-
-
 # ----------------------------------------------------- F4-F6: string validation
 
 #: Email regex — reference: customers_latest.sql:101 (Java dialect, same as Spark).
@@ -132,17 +126,6 @@ def non_empty(c: Column | str) -> Column:
     """x IS NOT NULL AND x != '' (reference: customers_latest.sql:111-121)."""
     col = F.col(c) if isinstance(c, str) else c
     return col.isNotNull() & (F.trim(col) != "")
-
-
-def all_present(*cols: Column | str) -> Column:
-    """Conjunction of non_empty over several columns — address
-    completeness flag (reference: customers_latest.sql:111-121)."""
-    out = None
-    for c in cols:
-        ne = non_empty(c)
-        out = ne if out is None else (out & ne)
-    assert out is not None
-    return out
 
 
 def full_name(first: Column | str, last: Column | str) -> Column:

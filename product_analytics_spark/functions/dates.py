@@ -87,12 +87,6 @@ def enrich_dates(df: DataFrame, ts_col: str, prefix: str = "order") -> DataFrame
     )
 
 
-def days_between(start: Column, end: Column) -> Column:
-    """DATEDIFF(end, start) — Databricks arg order (reference:
-    orders_cleaned.sql:226; DuckDB oracle uses date_diff('day', s, e))."""
-    return F.datediff(end, start)
-
-
 def as_of_lit(as_of: dt.date | str) -> Column:
     """Injected replacement for CURRENT_DATE (reference:
     dim_customer.sql:47-51,102 — made deterministic per SURVEY §7.4)."""

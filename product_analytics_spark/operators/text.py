@@ -151,12 +151,6 @@ def with_shingle_hashes31(
     ).drop("_th31")
 
 
-def _salted_hash(salt: int):
-    # Single-arg lambda: F.transform treats a 2-arg lambda as
-    # (element, array_index), which would clobber the salt.
-    return lambda s: F.xxhash64(F.lit(salt), s)
-
-
 def _minhash_sig_fold(hashes: Column, num_hashes: int, hasher: str) -> Column:
     """MinHash signature as ONE ``aggregate`` over the shingle-hash
     array carrying a ``num_hashes``-wide running-min vector.
@@ -233,16 +227,6 @@ def _band_hash_array(
             acc = f"xxhash64({b},{cols})"
         terms.append(acc)
     return F.expr("array(" + ",".join(terms) + ")")
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature: per salt i, min over shingles of
-    xxhash64(salt_i, shingle). Deterministic; array<long> output.
-
-    array_min over a transform — linear in shingle count, no shuffle.
-    """
-    sig = [F.array_min(F.transform(shingles, _salted_hash(i))) for i in range(num_hashes)]
-    return F.array(*sig)
 
 
 def minhash_near_dup_pairs(

@@ -87,29 +87,3 @@ def tumbling_window_agg(
         )
         .select(F.col("w.start").alias("window_start"), *group_cols, "n_events", "total_value")
     )
-
-
-def sliding_window_agg(
-    df: DataFrame,
-    ts_col: str = "ts",
-    duration: str = "1 hour",
-    slide: str = "15 minutes",
-    value_col: str = "value",
-) -> DataFrame:
-    """Overlapping windows — each row lands in duration/slide buckets
-    (F.window generates the copies; shuffle volume multiplies by that
-    factor, which is the honest cost of sliding windows anywhere)."""
-    win = F.window(F.col(ts_col), duration, slide)
-    return (
-        df.groupBy(win.alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.avg(value_col), 4).alias("avg_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "n_events",
-            "avg_value",
-        )
-    )

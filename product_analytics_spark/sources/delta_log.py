@@ -106,8 +106,8 @@ class DeltaProtocolError(RuntimeError):
 class DeltaConflictError(RuntimeError):
     """putIfAbsent lost: the target commit version already exists.
     The writer must re-read the snapshot and retry at the new version
-    — the same commit-retry loop ConcurrentWriteError drives for the
-    pointer store."""
+    — the same commit-retry loop ConcurrentWriteError drives in
+    SnapshotStore."""
 
 
 class MetadataChangedError(DeltaConflictError):

@@ -33,15 +33,6 @@ def _with_corrupt_col(schema: T.StructType) -> T.StructType:
     return T.StructType([*schema.fields, T.StructField(CORRUPT_COL, T.StringType())])
 
 
-def read_parquet_table(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
-    """Parquet scan; schema (when given) prunes columns at the reader
-    and fails fast on type drift instead of at first use."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
-
-
 def read_csv(
     spark: SparkSession,
     path: str,

@@ -10,24 +10,25 @@ Reference mapping (SURVEY.md §2.1):
   S7 ZORDER post-hook    OPTIMIZE ... ZORDER BY (customers_latest.sql:7 etc.)
   S8 schema evolution    on_schema_change='sync_all_columns'
 
-Commit protocol (no delta-spark in this container — fallback is the
-tested path): every overwrite/merge writes a fresh immutable version
-directory ``<table>/v_<uuid>/`` and then commits by atomically
-replacing the one-line pointer file ``<table>/_CURRENT`` via
-``os.replace`` (POSIX-atomic). A crash at ANY point leaves the
-pointer naming a fully-written version: before the replace, readers
-still see the old version; after, the new one. Superseded versions
-are garbage-collected on the next successful commit. This is the
-classic table-format commit (Delta/Iceberg do the same with a
-transaction log instead of a pointer file).
+Commit protocol (no delta-spark in this container): every
+overwrite/merge/DML writes a fresh immutable version directory
+``<table>/v_<uuid>/`` and then commits it with ONE putIfAbsent of the
+next ``_delta_log/<n>.json`` (sources/delta_log.py) — the table's only
+commit point, as in Delta. The log commit removes the previous
+version's files and adds the new version's; which version is current,
+which versions are retained and what time travel can read all resolve
+from the log. A crash or a refused/lost log commit before that
+putIfAbsent leaves the log, and so every reader, on the old version;
+the uncommitted directory is dropped (or vacuumed by age after a
+crash). Superseded versions are garbage-collected after the next
+successful commit.
 
-Object-store caveat: ``os.replace`` atomicity holds on POSIX
-filesystems (local disk, NFS, HDFS via mounts). On S3-like stores
-there is no atomic rename — swap this pointer for a real table format
-(Delta/Iceberg), whose log commit plays the same role; nothing above
-this class changes. With delta-spark installed, ``DeltaTable.merge``
-replaces the anti-join merge and ``OPTIMIZE ZORDER`` replaces the
-cluster pass (HAVE_DELTA gates it).
+Object-store caveat: the hardlink putIfAbsent holds on POSIX
+filesystems; on stores without it a ``CommitOwner`` (a catalog or
+registry) provides the atomicity — nothing above this class changes.
+With delta-spark installed, ``DeltaTable.merge`` replaces the
+anti-join merge and ``OPTIMIZE ZORDER`` replaces the cluster pass
+(HAVE_DELTA gates it).
 
 The ZORDER analog is repartitionByRange + sortWithinPartitions: same
 data-skipping effect (clustered min/max ranges per file) from OSS
@@ -55,18 +56,15 @@ try:  # delta-spark is optional; everything falls back to parquet.
 except Exception:  # pragma: no cover
     HAVE_DELTA = False
 
-_POINTER = "_CURRENT"
-_LOG = "_LOG"
 _LAYOUT = "_LAYOUT"
 _CONSTRAINTS = "_CONSTRAINTS"
 _GENERATED = "_GENERATED"
 _IDENTITY = "_IDENTITY"
 _PROPS = "_PROPS"
 _INVARIANTS = "_INVARIANTS"
-_ROW_TRACKING = "_ROW_TRACKING"
 
 #: Sentinel default for ``expected_version`` — distinct from None,
-#: which is a MEANINGFUL expectation (first write: no pointer yet).
+#: which is a MEANINGFUL expectation (no version dir is live yet).
 UNCHECKED = object()
 
 #: Read schema per immutable version dir (see _read_version_dir):
@@ -154,13 +152,15 @@ class ConstraintViolationError(RuntimeError):
 
 
 class SnapshotStore:
-    """Keyed SCD-1 snapshots in a warehouse directory, one table per
-    model, with atomic pointer-commit replace and merge/upsert.
+    """Keyed SCD-1 snapshots in a warehouse directory, one Delta table
+    per model, with merge/upsert and atomic log commits.
 
-    At 100 TB the same interface maps onto Delta/Iceberg tables: the
-    pointer commit becomes the table format's log commit and merge
-    becomes MERGE INTO with file pruning on the unique key; nothing
-    above this class changes.
+    Every write lands in a fresh ``v_<uuid>`` version dir and becomes
+    visible through one ``_delta_log`` commit (see the module doc);
+    the log is the only record of which version is current. At 100 TB
+    the same interface maps onto Delta/Iceberg proper: merge becomes
+    MERGE INTO with file pruning on the unique key; nothing above this
+    class changes.
     """
 
     def __init__(
@@ -168,44 +168,45 @@ class SnapshotStore:
         spark: SparkSession,
         warehouse_dir: str,
         retain_versions: int = 1,
-        delta_log: bool = False,
+        delta_log: bool = True,
         cdf: bool = False,
         commit_owner=None,
     ):
         """``retain_versions`` — how many committed versions to keep on
         disk (≥1). With >1, superseded versions stay readable via
-        ``read(name, version=...)`` — the pointer-file analog of
-        Delta/Iceberg time travel; GC drops versions that fall off the
-        retention window at the next commit (VACUUM analog).
+        ``read(name, version=...)`` (Delta time travel within the
+        retention window); GC drops versions that fall off the window
+        after the next commit (VACUUM analog).
 
-        ``delta_log=True`` additionally emits a protocol-conformant
-        Delta Lake ``_delta_log/`` (sources/delta_log.py) inside every
-        commit's locked section: JSON commits with protocol/metaData/
-        add/remove actions and per-file ``stats`` (numRecords +
-        min/max/nullCount collected once from the parquet footer at
-        write time). Readers — including scan planning via
-        ``scan_files``/``read_pruned`` and any independent protocol
-        parser — then plan from the log with ZERO parquet footer
-        opens. Files a COW rewrite hardlinks into the new version
-        reuse their previous add action's stats (same inode, same
-        content — no footer re-read). History older than the
-        retention window references GC'd files, exactly like Delta
-        history after VACUUM.
+        Every commit is a protocol-conformant Delta Lake
+        ``_delta_log/`` commit (sources/delta_log.py) made inside the
+        store's commit lock: protocol/metaData/add/remove actions with
+        per-file ``stats`` (numRecords + min/max/nullCount read once
+        from the parquet footer at write time). Readers — including
+        scan planning via ``scan_files``/``read_pruned`` and any
+        independent protocol parser — plan from the log with ZERO
+        parquet footer opens. Files a COW rewrite hardlinks into the
+        new version reuse their previous add action's stats (same
+        inode, same content — no footer re-read). History older than
+        the retention window references GC'd files, exactly like Delta
+        history after VACUUM. ``delta_log`` is accepted for
+        compatibility and must be True: there is no log-less mode.
 
-        ``cdf=True`` (requires ``delta_log=True``) enables the Change
-        Data Feed: every DML path (merge / delete / update, COW and
-        MoR alike) writes its row-level changes to
-        ``_change_data/cdc-*.parquet`` and references them with
-        ``cdc`` actions in the same commit, per Delta's
-        ``delta.enableChangeDataFeed`` contract;
+        ``cdf=True`` enables the Change Data Feed: every DML path
+        (merge / delete / update, COW and MoR alike) writes its
+        row-level changes to ``_change_data/cdc-*.parquet`` and
+        references them with ``cdc`` actions in the same commit, per
+        Delta's ``delta.enableChangeDataFeed`` contract;
         ``delta_log.table_changes`` reads them back with
         ``_change_type``/``_commit_version`` columns."""
+        if not delta_log:
+            raise ValueError(
+                "SnapshotStore always commits through _delta_log; "
+                "delta_log=False is not supported"
+            )
         self.spark = spark
         self.warehouse_dir = warehouse_dir
         self.retain_versions = max(1, retain_versions)
-        self.delta_log = bool(delta_log)
-        if cdf and not delta_log:
-            raise ValueError("cdf=True requires delta_log=True")
         self.cdf = bool(cdf)
         #: CommitOwner for the table's _delta_log commits (None =
         #: hardlink putIfAbsent). A registry/catalog owner makes the
@@ -224,17 +225,11 @@ class SnapshotStore:
     def path(self, name: str) -> str:
         return os.path.join(self.warehouse_dir, name)
 
-    def _pointer_path(self, name: str) -> str:
-        return os.path.join(self.path(name), _POINTER)
-
-    def _log_path(self, name: str) -> str:
-        return os.path.join(self.path(name), _LOG)
-
     # ---------------------------------------------- layout metadata
 
     def layout(self, name: str) -> dict:
         """The table's declared physical layout (partition/cluster/
-        zorder keys), recorded at write time — the pointer-file analog
+        zorder keys), recorded at write time — the engine-local analog
         of Delta's table properties. ``optimize`` consumes it to
         restore clustering; empty dict if never declared."""
         import json
@@ -276,10 +271,9 @@ class SnapshotStore:
     # --------------------------------------------- CHECK constraints
 
     def constraints(self, name: str) -> dict[str, str]:
-        """Declared CHECK constraints, name -> SQL expression — the
-        pointer-file analog of Delta's ``delta.constraints.<name>``
-        table properties (mirrored into the delta log's metaData when
-        ``delta_log=True``)."""
+        """Declared CHECK constraints, name -> SQL expression — Delta's
+        ``delta.constraints.<name>`` table properties, declared here
+        and mirrored into the delta log's metaData by every commit."""
         import json
 
         p = os.path.join(self.path(name), _CONSTRAINTS)
@@ -311,9 +305,9 @@ class SnapshotStore:
           :class:`ConstraintViolationError` with NOTHING committed;
         * NULL evaluates as satisfied (SQL CHECK semantics — use
           ``x IS NOT NULL`` to forbid nulls);
-        * under ``delta_log=True`` the constraint lands in metaData
-          configuration as ``delta.constraints.<cname>`` and the
-          protocol is upgraded to writer version ≥ 3 (the legacy
+        * the constraint lands in the log's metaData configuration
+          as ``delta.constraints.<cname>`` and the protocol is
+          upgraded to writer version ≥ 3 (the legacy
           checkConstraints writer feature), so any protocol-aware
           writer knows it must enforce or refuse.
 
@@ -330,20 +324,23 @@ class SnapshotStore:
         cons = self.constraints(name)
         cons[cname] = expr_sql
         self._write_constraints(name, cons)
-        if self.delta_log and self.current_data_dir(name) is not None:
-            # surface the property in the log without waiting for the
-            # next data commit (metaData-only commit, like Delta's
-            # ALTER TABLE)
-            with self._commit_lock(name):
-                self._delta_commit(name, operation="ADD CONSTRAINT")
+        self._metadata_commit(name, "ADD CONSTRAINT")
 
     def drop_constraint(self, name: str, cname: str) -> None:
         cons = self.constraints(name)
         cons.pop(cname, None)
         self._write_constraints(name, cons)
-        if self.delta_log and self.current_data_dir(name) is not None:
+        self._metadata_commit(name, "DROP CONSTRAINT")
+
+    def _metadata_commit(self, name: str, operation: str) -> None:
+        """Surface a declaration change in the log without waiting for
+        the next data commit (a metaData-only commit, like Delta's
+        ALTER TABLE); nothing to do before the table's first commit."""
+        if self.exists(name):
             with self._commit_lock(name):
-                self._delta_commit(name, operation="DROP CONSTRAINT")
+                self._delta_commit(
+                    name, self.current_data_dir(name), operation=operation
+                )
 
     def _assert_satisfies(
         self, df: DataFrame, cname: str, expr_sql: str
@@ -452,9 +449,8 @@ class SnapshotStore:
 
     def table_properties(self, name: str) -> dict[str, str]:
         """Declared table properties (``delta.appendOnly``, ...) —
-        the pointer-file analog of Delta's TBLPROPERTIES, mirrored
-        into the delta log's metaData configuration when
-        ``delta_log=True``."""
+        Delta's TBLPROPERTIES, mirrored into the delta log's metaData
+        configuration by every commit."""
         import json
 
         p = os.path.join(self.path(name), _PROPS)
@@ -465,7 +461,7 @@ class SnapshotStore:
 
     def set_table_property(self, name: str, key: str, value: str) -> None:
         """``ALTER TABLE t SET TBLPROPERTIES (key = value)`` — one
-        sidecar write plus (under ``delta_log=True``) a metaData-only
+        sidecar write plus (once the table exists) a metaData-only
         log commit so protocol-aware readers see the property
         immediately, like Delta's ALTER TABLE."""
         import json
@@ -477,9 +473,7 @@ class SnapshotStore:
         with open(tmp, "w", encoding="utf-8") as fh:
             json.dump(props, fh, sort_keys=True)
         os.replace(tmp, os.path.join(self.path(name), _PROPS))
-        if self.delta_log and self.current_data_dir(name) is not None:
-            with self._commit_lock(name):
-                self._delta_commit(name, operation="SET TBLPROPERTIES")
+        self._metadata_commit(name, "SET TBLPROPERTIES")
 
     def set_append_only(self, name: str, enabled: bool = True) -> None:
         """Activate Delta's **append-only** writer feature
@@ -522,7 +516,7 @@ class SnapshotStore:
         (Delta's ``delta.invariants`` field metadata, the legacy
         writer-version-2 feature) — enforced on every write by
         ``_validate_constraints``; mirrored into the log metaData's
-        schemaString field metadata when ``delta_log=True``."""
+        schemaString field metadata."""
         import json
 
         p = os.path.join(self.path(name), _INVARIANTS)
@@ -568,9 +562,7 @@ class SnapshotStore:
         with open(tmp, "w", encoding="utf-8") as fh:
             json.dump(invs, fh, sort_keys=True)
         os.replace(tmp, os.path.join(self.path(name), _INVARIANTS))
-        if self.delta_log and self.current_data_dir(name) is not None:
-            with self._commit_lock(name):
-                self._delta_commit(name, operation="ALTER TABLE")
+        self._metadata_commit(name, "ALTER TABLE")
 
     # --------------------------------------------- generated columns
 
@@ -595,9 +587,9 @@ class SnapshotStore:
         * a write that SUPPLIES it is validated — any row where the
           supplied value differs from the expression (null-safe) is
           a ConstraintViolationError with nothing committed;
-        * under ``delta_log=True`` the expression lands in the
-          field's metadata as ``delta.generationExpression`` and the
-          protocol floor moves to writer ≥ 4.
+        * the expression lands in the log schema's field metadata
+          as ``delta.generationExpression`` and the protocol floor
+          moves to writer ≥ 4.
 
         Declare BEFORE the first write that should carry the column
         (the canonical use: a partition column derived from an event
@@ -865,62 +857,106 @@ class SnapshotStore:
         )
         return existing.unionByName(fresh.select(*existing.columns))
 
+    # ------------------------------------------- version resolution
+
+    def _snapshot(self, name: str):
+        """The table's latest ``_delta_log`` snapshot (memoized by
+        ``DeltaLog.snapshot``), or None before its first commit."""
+        from product_analytics_spark.sources import delta_log as dl
+
+        log = dl.DeltaLog(self.path(name))
+        try:
+            return log.snapshot()
+        except dl.DeltaProtocolError:
+            if log.latest_version() is None:
+                return None
+            raise
+
+    @staticmethod
+    def _live_dir(snap) -> str | None:
+        """The ``v_…`` dir holding ``snap``'s live files (every commit
+        swaps whole dirs, so one path decides); "" for files at the
+        table root (first written by ``append``); None if none."""
+        for rel in snap.files:
+            head, sep, _ = rel.partition("/")
+            return head if sep and head.startswith("v_") else ""
+        return None
+
+    def _committed_dirs(self, name: str, n: int) -> list[str]:
+        """The newest ``n`` committed version dirs still on disk,
+        newest first: the live dir, then the dirs the log's add
+        actions name, read from the newest commit back (a write that
+        left no data file adds none, so it is never listed)."""
+        import json
+
+        from product_analytics_spark.sources import delta_log as dl
+
+        table = self.path(name)
+        cur = self.current_version(name)
+        dirs = [cur] if cur else []
+        for _v, p in reversed(dl.DeltaLog(table)._commits()):
+            if len(dirs) >= n:
+                break
+            with open(p, encoding="utf-8") as fh:
+                # every add of one commit sits in one version dir
+                ln = next((x for x in fh if x.startswith('{"add"')), None)
+            if ln is None:
+                continue
+            head, sep, _ = json.loads(ln)["add"]["path"].partition("/")
+            if (
+                sep and head.startswith("v_") and head not in dirs
+                and os.path.isdir(os.path.join(table, head))
+            ):
+                dirs.append(head)
+        return dirs[:n]
+
     def versions(self, name: str) -> list[str]:
-        """Committed versions still on disk, oldest→newest (the
-        retention window's tail of the commit log)."""
-        log = self._log_path(name)
-        if not os.path.isfile(log):
-            return []
-        with open(log, encoding="utf-8") as fh:
-            committed = [ln.strip() for ln in fh if ln.strip()]
-        return [
-            v for v in committed if os.path.isdir(os.path.join(self.path(name), v))
-        ]
+        """Committed version dirs in the retention window, oldest→
+        newest — what time travel by index reads."""
+        return self._committed_dirs(name, self.retain_versions)[::-1]
 
     def current_data_dir(self, name: str) -> str | None:
-        """Directory of the committed version, or None if absent.
-
-        Pointer layout if present; otherwise a plain parquet dir
-        (append-only tables, pre-existing data) is its own version.
-        """
-        table = self.path(name)
-        ptr = self._pointer_path(name)
-        if os.path.isfile(ptr):
-            with open(ptr, encoding="utf-8") as fh:
-                version = fh.read().strip()
-            vdir = os.path.join(table, version)
-            return vdir if os.path.isdir(vdir) else None
-        return table if os.path.isdir(table) else None
+        """Directory of the live files in the latest log snapshot;
+        None before the first commit and while no file is live."""
+        snap = self._snapshot(name)
+        d = None if snap is None else self._live_dir(snap)
+        if d is None:
+            return None
+        return os.path.join(self.path(name), d) if d else self.path(name)
 
     def current_version(self, name: str) -> str | None:
-        """The committed version id (pointer contents) — the snapshot
-        identity an optimistic transaction reads and later presents as
-        ``expected_version`` at commit. None before the first commit
-        (and for plain pre-existing dirs, which have no pointer)."""
-        ptr = self._pointer_path(name)
-        if not os.path.isfile(ptr):
-            return None
-        with open(ptr, encoding="utf-8") as fh:
-            return fh.read().strip()
+        """The live version dir name (``v_…``) — the snapshot identity
+        an optimistic transaction reads and later presents as
+        ``expected_version`` at commit. None if no ``v_`` dir is
+        live."""
+        snap = self._snapshot(name)
+        d = None if snap is None else self._live_dir(snap)
+        return d or None
 
     def exists(self, name: str) -> bool:
-        return self.current_data_dir(name) is not None
+        return self._snapshot(name) is not None
 
     def read(self, name: str, version: int | str | None = None) -> DataFrame | None:
         """Prior snapshot ({{ this }}) or None on first run.
 
         ``version`` time-travels within the retention window: an int
-        indexes ``versions()`` (0 = oldest retained, -1 = current), a
+        indexes ``versions()`` (0 = oldest retained, -1 = newest), a
         str names a version directory directly. Requires the store to
         have been created with ``retain_versions > 1`` for anything
-        but the current version to still exist.
+        but the current version to still exist. A table with no live
+        file reads as an empty DataFrame with the log's schema.
 
         If the version carries a deletion vector (``_dv/`` — written
         by ``delete_where_mor``), the tombstoned row positions are
         filtered out via a broadcast anti-join on
         (file basename, ``_metadata.row_index``) — the merge-on-read
         half of the DELETE cost model (q290)."""
-        rt = self._row_tracking(name)
+        from product_analytics_spark.sources import delta_log as dl
+
+        snap = self._snapshot(name)
+        if snap is None:
+            return None
+        rt = snap.row_tracking_enabled()
 
         def _hide_rt(df: DataFrame) -> DataFrame:
             # the materialized row-id columns are PHYSICAL, not
@@ -928,16 +964,22 @@ class SnapshotStore:
             # them the same way); read_row_ids is the id-aware reader
             if not rt:
                 return df
-            from product_analytics_spark.sources import delta_log as dl
-
             return df.drop(
                 dl.MATERIALIZED_ROW_ID_COL, dl.MATERIALIZED_ROW_COMMIT_COL
             )
 
         if version is None:
-            data = self.current_data_dir(name)
-            if data is None:
-                return None
+            d = self._live_dir(snap)
+            if d is None:
+                import json
+
+                from pyspark.sql.types import StructType
+
+                schema = StructType.fromJson(
+                    json.loads(snap.metadata["schemaString"])
+                )
+                return self.spark.createDataFrame([], schema)
+            data = os.path.join(self.path(name), d) if d else self.path(name)
             return _hide_rt(self._apply_dv(data, merge_schema=rt))
         if isinstance(version, int):
             vs = self.versions(name)
@@ -992,29 +1034,24 @@ class SnapshotStore:
         )
 
     def _row_tracking(self, name: str) -> bool:
-        """O(1) row-tracking check (marker file written by
-        ``enable_row_tracking`` — the log's configuration is the
-        source of truth, this avoids a snapshot replay per read)."""
-        return os.path.isfile(os.path.join(self.path(name), _ROW_TRACKING))
+        """Row tracking is on iff the latest log snapshot's
+        configuration enables it (``delta.enableRowTracking``) — the
+        same memoized snapshot that resolves the current version."""
+        snap = self._snapshot(name)
+        return snap is not None and snap.row_tracking_enabled()
 
     def enable_row_tracking(self, name: str) -> int:
-        """Enable the Delta row-tracking writer feature on this table
-        (requires ``delta_log=True``): protocol upgrade + per-file
-        ``baseRowId`` backfill + ``delta.rowTracking`` domainMetadata
-        high-water mark (see ``delta_log.enable_row_tracking``). From
-        then on every commit allocates fresh id ranges for new files,
-        and the MoR DML paths PRESERVE matched rows' ids by
-        materializing them into the rewritten files. Read ids back
-        with ``delta_log.read_row_ids``."""
-        if not self.delta_log:
-            raise ValueError("row tracking requires delta_log=True")
+        """Enable the Delta row-tracking writer feature on this table:
+        protocol upgrade + per-file ``baseRowId`` backfill +
+        ``delta.rowTracking`` domainMetadata high-water mark (see
+        ``delta_log.enable_row_tracking``). From then on every commit
+        allocates fresh id ranges for new files, and the MoR DML paths
+        PRESERVE matched rows' ids by materializing them into the
+        rewritten files. Read ids back with
+        ``delta_log.read_row_ids``."""
         from product_analytics_spark.sources import delta_log as dl
 
-        v = dl.enable_row_tracking(self.path(name))
-        marker = os.path.join(self.path(name), _ROW_TRACKING)
-        with open(marker, "w", encoding="utf-8") as fh:
-            fh.write("enabled\n")
-        return v
+        return dl.enable_row_tracking(self.path(name))
 
     def _rt_base_df(self, name: str, data_dir: str):
         """Broadcastable (version-relative path, baseRowId,
@@ -1145,14 +1182,8 @@ class SnapshotStore:
         try:
             cur = self.current_version(name)
             if cur:
-                return max(
-                    1,
-                    len(
-                        self._partition_dirs(
-                            os.path.join(self.path(name), cur)
-                        )
-                    ),
-                )
+                vdir = os.path.join(self.path(name), cur)
+                return max(1, len(self._partition_dirs(vdir)))
         except Exception:  # noqa: BLE001 — metadata probe only
             pass
         return 8
@@ -1257,7 +1288,7 @@ class SnapshotStore:
         the DV. Optimistic transaction like the COW paths
         (``post_scan`` = the same fault-injection window).
 
-        With ``delta_log=True`` the commit additionally emits
+        The log commit also emits
         protocol-v3 ``deletionVector`` descriptors on the affected
         adds (roaring-bitmap sidecar per commit, protocol upgraded to
         reader 3 / writer 7 with the deletionVectors table feature —
@@ -1346,7 +1377,6 @@ class SnapshotStore:
             except ConcurrentWriteError as exc:
                 last_err = exc
                 self._abort_cdc(name, cdc_fut)
-                shutil.rmtree(vdir, ignore_errors=True)
                 continue
             except Exception:
                 self._abort_cdc(name, cdc_fut)
@@ -1383,9 +1413,9 @@ class SnapshotStore:
         ``assignments`` maps column -> SQL expression (cast back to the
         column's original type, same schema-enforcement rule as the
         COW update). Partition-column reassignment is refused (it
-        would move rows across hive directories). Under
-        ``delta_log=True`` the commit carries protocol-v3
-        ``deletionVector`` descriptors like ``delete_where_mor``."""
+        would move rows across hive directories). The log commit
+        carries protocol-v3 ``deletionVector`` descriptors like
+        ``delete_where_mor``."""
         data0 = self.current_data_dir(name)
         if data0 is not None:
             part_cols = {
@@ -1584,7 +1614,6 @@ class SnapshotStore:
                 self._abort_cdc(name, cdc_fut)
                 self._abort_validation(val_fut)
                 self._abort_validation(dv_fut)
-                shutil.rmtree(vdir, ignore_errors=True)
                 continue
             except ConstraintViolationError:
                 # the violation must surface as such, never be
@@ -1644,8 +1673,8 @@ class SnapshotStore:
         ``sync_all_columns`` schema evolution); values are cast to the
         table's column types. OCC transaction with the same
         ``post_scan`` fault-injection window as the other DML paths.
-        Under ``delta_log=True`` the commit carries protocol-v3
-        ``deletionVector`` descriptors like the other MoR ops."""
+        The log commit carries protocol-v3 ``deletionVector``
+        descriptors like the other MoR ops."""
         self._assert_appendable(name, "MERGE (merge-on-read)")
         keys = [key] if isinstance(key, str) else list(key)
         last_err: ConcurrentWriteError | None = None
@@ -1880,7 +1909,6 @@ class SnapshotStore:
                 self._abort_cdc(name, cdc_fut)
                 self._abort_validation(val_fut)
                 self._abort_validation(dv_fut)
-                shutil.rmtree(vdir, ignore_errors=True)
                 continue
             except ConstraintViolationError:
                 # surface the violation itself (same rule as merge/
@@ -1965,7 +1993,7 @@ class SnapshotStore:
         NEW commit — history above the restore point is preserved
         (the restore is itself just another version; time travel to
         the pre-restore state still works within retention), which is
-        what distinguishes RESTORE from rolling back the pointer.
+        what distinguishes RESTORE from rolling back the log.
 
         ``version`` is a committed version dir name (``v_...``) or an
         index into :meth:`versions` (negative = from the end, like
@@ -2025,7 +2053,6 @@ class SnapshotStore:
                 )
             except ConcurrentWriteError as exc:
                 last_err = exc
-                shutil.rmtree(vdir, ignore_errors=True)
                 continue
             except Exception:
                 shutil.rmtree(vdir, ignore_errors=True)
@@ -2129,8 +2156,8 @@ class SnapshotStore:
 
     def _commit_lock(self, name: str):
         """Short mutex around the compare-and-commit critical section
-        (held for microseconds — the version data is already on disk
-        before _commit runs): an exclusive ``fcntl.flock`` on a
+        (the version data is already on disk before _commit runs; it
+        covers the log commit only): an exclusive ``fcntl.flock`` on a
         PERSISTENT lock file. The kernel releases the lock when the
         holder's fd closes — including on crash — so there is no
         staleness heuristic at all, and therefore none of the
@@ -2183,72 +2210,60 @@ class SnapshotStore:
         version: str,
         expected_version=UNCHECKED,
         operation: str = "WRITE",
+        schema=None,
+        partition_by: Sequence[str] = (),
     ) -> None:
-        """Atomically point ``_CURRENT`` at ``version`` (the commit
-        point), append it to the commit log, then garbage-collect
-        versions that fell off the retention window.
+        """Commit the fully-written version dir ``version`` with one
+        ``_delta_log`` commit — the table's only commit point — then
+        garbage-collect versions that fell off the retention window.
 
-        Optimistic concurrency: with ``expected_version`` set (the
-        version the transaction READ — ``current_version()`` at its
-        start, None for first-write), the pointer must still name it
-        inside the locked section, or ConcurrentWriteError is raised
-        and NOTHING commits — the Delta/Iceberg conflict check. The
-        default stays last-writer-wins (dbt full-refresh semantics)."""
+        Optimistic concurrency: with ``expected_version`` set (what
+        ``current_version()`` returned at the transaction's start),
+        the log must still name it inside the locked section, or
+        ConcurrentWriteError is raised. The default stays
+        last-writer-wins (dbt full-refresh semantics). A putIfAbsent
+        lost to another writer is the same conflict; a refused commit
+        (append-only, coordinator-owned, vanished change file) keeps
+        its own error. On any failure the uncommitted dir is dropped
+        and the table is unchanged. ``schema``/``partition_by`` feed
+        the log's metaData when the version has no data file."""
+        from product_analytics_spark.sources import delta_log as dl
+
         table = self.path(name)
-        tmp = os.path.join(table, f"_ptr_{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            fh.write(version)
-        with self._commit_lock(name):
-            if expected_version is not UNCHECKED:
-                cur = self.current_version(name)
-                if cur != expected_version:
-                    os.unlink(tmp)
-                    raise ConcurrentWriteError(
-                        f"table {name!r}: committed version moved "
-                        f"{expected_version!r} -> {cur!r} since this "
-                        "transaction's snapshot read; re-read and retry"
+        vdir = os.path.join(table, version)
+        try:
+            with self._commit_lock(name):
+                if expected_version is not UNCHECKED:
+                    cur = self.current_version(name)
+                    if cur != expected_version:
+                        raise ConcurrentWriteError(
+                            f"table {name!r}: committed version moved "
+                            f"{expected_version!r} -> {cur!r} since this "
+                            "transaction's snapshot read; re-read and retry"
+                        )
+                try:
+                    self._delta_commit(
+                        name, vdir, operation=operation,
+                        schema=schema, partition_by=partition_by,
                     )
-            os.replace(tmp, self._pointer_path(name))  # POSIX-atomic
-            log = self._log_path(name)
-            committed: list[str] = []
-            if os.path.isfile(log):
-                with open(log, encoding="utf-8") as fh:
-                    committed = [ln.strip() for ln in fh if ln.strip()]
-            committed.append(version)
-            live = [
-                v
-                for v in committed
-                if os.path.isdir(os.path.join(table, v))
-            ]
-            retained_list = live[-self.retain_versions :]
-            if version not in retained_list:
-                retained_list.append(version)
-            # Truncate the commit log to the retention window (Delta's
-            # log checkpoint/cleanup analog): without this it grows one
-            # line per commit forever. Inside the lock so a concurrent
-            # committer's fresh append can never be stomped; atomic
-            # replace so readers only ever see a complete log.
-            log_tmp = os.path.join(table, f"_log_{uuid.uuid4().hex[:8]}")
-            with open(log_tmp, "w", encoding="utf-8") as fh:
-                fh.write("".join(v + "\n" for v in retained_list))
-            os.replace(log_tmp, log)
-            if self.delta_log:
-                # Inside the lock so delta-log version order matches
-                # pointer-commit order exactly (the log's own
-                # putIfAbsent is a second, independent guard).
-                self._delta_commit(name, operation=operation)
-        # GC deletes ONLY previously COMMITTED versions that fell off
-        # the retention window. A bare "every v_ dir not retained"
-        # sweep (the old rule) could destroy a CONCURRENT writer's
-        # uncommitted version dir — under last-writer-wins that writer
-        # then commits a pointer to a deleted directory (data loss).
-        # Uncommitted dirs belong to in-flight writers; crashed
-        # writers' orphans are vacuumed by age instead.
-        retained = set(retained_list)
-        for v in committed:
-            if v not in retained:
-                shutil.rmtree(os.path.join(table, v), ignore_errors=True)
-        self._vacuum_orphans(name, retained)
+                except dl.DeltaConflictError as exc:
+                    raise ConcurrentWriteError(
+                        f"table {name!r}: lost the _delta_log commit race "
+                        f"({exc}); re-read and retry"
+                    ) from exc
+        except BaseException:
+            shutil.rmtree(vdir, ignore_errors=True)
+            raise
+        # GC deletes ONLY committed versions that fell off the
+        # retention window: uncommitted dirs belong to in-flight
+        # writers (crashed writers' orphans are vacuumed by age). A
+        # version with no data file is never live; its dir goes now.
+        recent = self._committed_dirs(name, self.retain_versions + 1)
+        if version not in recent:
+            shutil.rmtree(vdir, ignore_errors=True)
+        for v in recent[self.retain_versions :]:
+            shutil.rmtree(os.path.join(table, v), ignore_errors=True)
+        self._vacuum_orphans(name, set(recent[: self.retain_versions]))
 
     #: age after which an uncommitted version dir is presumed to belong
     #: to a CRASHED writer and may be vacuumed (in-flight writers finish
@@ -2418,11 +2433,19 @@ class SnapshotStore:
                 pass
         pending.clear()
 
-    def _delta_commit(self, name: str, operation: str = "WRITE") -> None:
+    def _delta_commit(
+        self,
+        name: str,
+        data: str | None,
+        operation: str = "WRITE",
+        schema=None,
+        partition_by: Sequence[str] = (),
+    ) -> None:
         """Emit one protocol-conformant ``_delta_log`` commit
-        reconciling the log's live file set against the CURRENT data
-        dir (called inside the commit lock, right after the pointer
-        flip, so log order == commit order):
+        reconciling the log's live file set against the data dir
+        ``data`` (the version being committed, or the current dir for
+        appends and metadata-only commits; called inside the commit
+        lock, so log order == commit order):
 
         * adds    = files on disk the log doesn't know (stats from one
                     footer read each — or REUSED from the prior add
@@ -2435,21 +2458,20 @@ class SnapshotStore:
 
         metaData (Spark schemaString + partitionColumns) is emitted on
         the first commit and re-emitted when the data files' arrow
-        schema fingerprint changes (schema evolution)."""
+        schema fingerprint changes (schema evolution). A first commit
+        with no data file takes ``schema``/``partition_by`` from the
+        writer; the first later commit with files re-derives both."""
         import hashlib
         import json
 
         from product_analytics_spark.sources import delta_log as dl
 
         table = self.path(name)
-        data = self.current_data_dir(name)
-        if data is None:
-            return
         log = dl.DeltaLog(table, owner=self.commit_owner)
         latest = log.latest_version()
         prev = log.snapshot(latest) if latest is not None else None
 
-        parts = self._partition_dirs(data)
+        parts = self._partition_dirs(data) if data is not None else []
         part_cols = []
         for rel, _fs in parts:
             for c, _v in self._partition_literals(rel):
@@ -2472,7 +2494,7 @@ class SnapshotStore:
         # by the MoR DML paths): version-relative (path, row_index)
         # positions, keyed up to table-relative add paths below.
         dv_by_rel: dict[str, list[int]] = {}
-        dv_dir = self._dv_dir(data)
+        dv_dir = self._dv_dir(data) if data is not None else ""
         if os.path.isdir(dv_dir):
             import pyarrow.parquet as pq
 
@@ -2573,9 +2595,8 @@ class SnapshotStore:
 
         # Schema fingerprint from ONE data file's arrow schema (cheap,
         # no Spark job); full Spark schemaString only when it changes.
-        rt_marker = self._row_tracking(name)
         rt_phys_cols = ()
-        if rt_marker:
+        if rt_enabled:
             rt_phys_cols = (
                 dl.MATERIALIZED_ROW_ID_COL,
                 dl.MATERIALIZED_ROW_COMMIT_COL,
@@ -2646,6 +2667,10 @@ class SnapshotStore:
         need_meta = (
             prev is None
             or not prev.metadata
+            # the first files after an empty first write: derive the
+            # schema and partition columns from them
+            or (first_abs is not None and not prev.files
+                and not prev_conf.get("engine.arrowSchemaHash"))
             or (
                 schema_hash is not None
                 and prev_conf.get("engine.arrowSchemaHash")
@@ -2732,6 +2757,14 @@ class SnapshotStore:
                 # changes on such tables need explicit DDL (Delta's
                 # rule too) — keep the previous logical schemaString.
                 schema_json = prev.metadata["schemaString"]
+            elif first_abs is None:
+                # no data file to infer from: keep the log's schema,
+                # or take the writer's on an empty first write
+                prev_meta = prev.metadata if prev is not None else {}
+                schema_json = prev_meta.get("schemaString") or schema.json()
+                part_cols = list(
+                    prev_meta.get("partitionColumns") or partition_by
+                )
             else:
                 # NOT routed through the _read_version_dir memo
                 # (round-13, examined and left): this branch runs
@@ -2741,7 +2774,7 @@ class SnapshotStore:
                 # could be the pre-append one. Fresh inference is the
                 # correct ~80 ms.
                 reader = self.spark.read
-                if rt_marker:
+                if rt_enabled:
                     reader = reader.option("mergeSchema", "true")
                 schema_json = reader.parquet(data).schema.json()
             if rt_phys_cols:
@@ -2867,7 +2900,6 @@ class SnapshotStore:
                         }
                     }
                 )
-            self._cdc_pending(name).clear()
         if prev is not None and not any(
             k in a for a in actions for k in ("add", "remove", "metaData", "cdc")
         ):
@@ -2877,10 +2909,13 @@ class SnapshotStore:
             version=0 if latest is None else latest + 1,
             operation=operation,
         )
+        # only a landed commit owns the staged change files; a refused
+        # or lost one leaves them for the caller's _discard_cdc
+        self._cdc_pending(name).clear()
 
     def delta_snapshot(self, name: str, version: int | None = None):
         """The table's Delta snapshot (live file set + metadata) at a
-        log version — requires ``delta_log=True`` writes."""
+        log version (default: latest)."""
         from product_analytics_spark.sources import delta_log as dl
 
         return dl.DeltaLog(self.path(name)).snapshot(version)
@@ -2923,10 +2958,7 @@ class SnapshotStore:
         table = self.path(name)
         part_cols = (snap.metadata or {}).get("partitionColumns") or []
         if not kept:
-            schema = self.spark.read.parquet(
-                self.current_data_dir(name)
-            ).schema
-            return self.spark.createDataFrame([], schema)
+            return self.spark.createDataFrame([], self.read(name).schema)
         positions = snap.dv_positions(table)
         if not part_cols:
             df = self.spark.read.parquet(
@@ -2966,7 +2998,7 @@ class SnapshotStore:
         _generated_applied: bool = False,
         _pre_commit=None,
     ) -> None:
-        """Atomic full replace: write a version dir, commit the pointer.
+        """Atomic full replace: write a version dir, commit it to the log.
 
         ``zorder_by`` lays the files out on the multi-column Morton
         curve (see ``_write_version``) — the ``OPTIMIZE ZORDER BY``
@@ -2982,7 +3014,7 @@ class SnapshotStore:
         z-order key flips the write to equal-DEPTH quantile lanes; the
         RESOLVED boolean is what gets recorded in the layout, so a
         later ``optimize()`` reclusters with the same scheme."""
-        if operation != "OPTIMIZE" and self.current_data_dir(name) is not None:
+        if operation != "OPTIMIZE" and self.exists(name):
             # Replacing an EXISTING table's rows removes data —
             # forbidden on an append-only table (PROTOCOL.md). The
             # initial write and rearrange-only rewrites (purge_dv's
@@ -3041,17 +3073,13 @@ class SnapshotStore:
                     ignore_errors=True,
                 )
                 raise
-        try:
-            self._commit(
-                name, version,
-                expected_version=expected_version,
-                operation=operation,
-            )
-        except ConcurrentWriteError:
-            shutil.rmtree(
-                os.path.join(self.path(name), version), ignore_errors=True
-            )
-            raise
+        self._commit(
+            name, version,
+            expected_version=expected_version,
+            operation=operation,
+            schema=df.schema,
+            partition_by=partition_by,
+        )
         # Record the layout declaration only AFTER the commit succeeds
         # (ADVICE r8): a transaction that loses the OCC race committed
         # nothing, so it must not redefine the clustering a later
@@ -3073,7 +3101,6 @@ class SnapshotStore:
         dbt's default incremental behavior; use merge/overwrite for
         transactional semantics.
         """
-        self._assert_coordinator_routed(name)
         df = self._apply_identity(name, df)
         df = self._apply_generated(name, df)
         self._validate_constraints(name, df)
@@ -3094,48 +3121,37 @@ class SnapshotStore:
                 if partition_by
                 else df.coalesce(1)
             )
-        data = self.current_data_dir(name) or self.path(name)
+        data = self.current_data_dir(name)
+        if data is None:
+            # first write: the table root; an existing table with no
+            # live file: a fresh version dir (the root holds retained
+            # versions the log no longer lists as live)
+            data = self.path(name)
+            if self.exists(name):
+                data = os.path.join(data, f"v_{uuid.uuid4().hex[:12]}")
+        before = {f for _r, fs in self._partition_dirs(data) for f in fs}
         writer = df.write.mode("append")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(data)
-        if self.delta_log:
-            # An append IS a commit in Delta terms: add actions for the
-            # new files (reconciled: disk minus log-live), no removes.
-            with self._commit_lock(name):
-                self._delta_commit(name, operation="WRITE")
-        self._maybe_auto_compact(name)
-
-    def _assert_coordinator_routed(self, name: str) -> None:
-        """Coordinated-commits FAIL-FAST for the in-place append
-        path (found by the q476 composition capstone): ``append``
-        writes parquet into the CURRENT data dir before the log
-        commit, so letting ``DeltaLog.commit`` refuse afterwards
-        leaves orphaned data files that the next writer's
-        disk-minus-log reconcile silently ADOPTS — committing rows a
-        writer was just told it could not commit. Check the table's
-        coordinator declaration BEFORE any byte lands."""
-        if not self.delta_log:
-            return
-        from product_analytics_spark.sources import delta_log as dl
-
+        # An append IS a commit in Delta terms: add actions for the
+        # new files (reconciled: disk minus log-live), no removes. If
+        # the log refuses it (e.g. a coordinator-owned table), the
+        # files it wrote go again — left behind, the next writer's
+        # reconcile would adopt rows this writer was refused.
         try:
-            conf = (
-                self.delta_snapshot(name).metadata or {}
-            ).get("configuration") or {}
-        except Exception:  # noqa: BLE001 — no log yet: nothing declared
-            return
-        declared = conf.get(dl.COMMIT_COORDINATOR_PROP)
-        if declared and (
-            getattr(self.commit_owner, "coordinator_name", None)
-            != declared
-        ):
-            raise dl.DeltaProtocolError(
-                f"table {name!r} commits are owned by coordinator "
-                f"{declared!r} ({dl.COMMIT_COORDINATOR_PROP}): "
-                "configure SnapshotStore(commit_owner=...) with that "
-                "coordinator; nothing written"
-            )
+            with self._commit_lock(name):
+                self._delta_commit(
+                    name, data, operation="WRITE",
+                    schema=df.schema, partition_by=partition_by,
+                )
+        except BaseException:
+            for _r, fs in self._partition_dirs(data):
+                for f in fs:
+                    if f not in before:
+                        os.unlink(f)
+            raise
+        self._maybe_auto_compact(name)
 
     def _maybe_auto_compact(self, name: str) -> None:
         """``delta.autoOptimize.autoCompact`` (delta.io auto
@@ -3187,7 +3203,7 @@ class SnapshotStore:
         returns the merged snapshot DataFrame (freshly readable).
 
         The merged relation lazily reads the OLD version's files;
-        writing the new version before the pointer commit means the
+        writing the new version before the log commit means the
         read and the write never race — the commit happens only after
         the new version is fully on disk.
 
@@ -3338,7 +3354,7 @@ class SnapshotStore:
                 # A concurrent commit may have GC'd the snapshot this
                 # merge's plan lazily reads (retention window) — with
                 # isolation on, that is the same conflict surfaced
-                # during the write instead of at the pointer compare.
+                # during the write instead of at the version compare.
                 # Version unmoved ⇒ genuine failure: re-raise.
                 self._abort_cdc(name, cdc_fut)
                 self._abort_validation(val_fut)
@@ -3365,7 +3381,7 @@ class SnapshotStore:
         order. Flat tables yield one ``(".", files)`` pair; hive-
         partitioned tables yield one pair per leaf partition directory
         (``order_year=1996/order_month=3``). Hidden/metadata entries
-        (``_SUCCESS``, ``.crc``, the pointer/log files) are skipped."""
+        (``_SUCCESS``, ``.crc``, ``_delta_log``, ``_dv``) are skipped."""
         out: list[tuple[str, list[str]]] = []
         for root, dirs, files in os.walk(data):
             dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
@@ -3449,7 +3465,7 @@ class SnapshotStore:
     ) -> dict:
         """Execute the compaction plan (OPTIMIZE's rewrite half): each
         planned group is rewritten as ONE file into a fresh version
-        dir, then the pointer commits atomically — readers switch from
+        dir, then the log commits it atomically — readers switch from
         N small files to |groups| files in one rename, with the prior
         version retained per the retention window (time travel to the
         pre-compaction layout still works).
@@ -3554,7 +3570,6 @@ class SnapshotStore:
                 self._commit(name, version, expected_version=expected, operation="OPTIMIZE")
             except ConcurrentWriteError as exc:
                 last_err = exc
-                shutil.rmtree(vdir, ignore_errors=True)
                 continue
             except Exception:
                 # A concurrent commit may have GC'd this attempt's
@@ -3618,16 +3633,8 @@ class SnapshotStore:
         # engine maintaining the table reclusters the same way, which
         # is the point of putting them in the log (Delta's successor
         # to ZORDER post-hooks).
-        liquid_keys: list[str] = []
-        if self.delta_log:
-            from product_analytics_spark.sources import delta_log as dl
-
-            try:
-                liquid_keys = self.delta_snapshot(
-                    name
-                ).clustering_columns()
-            except dl.DeltaProtocolError:
-                liquid_keys = []
+        snap = self._snapshot(name)
+        liquid_keys = snap.clustering_columns() if snap is not None else []
         layout = self.layout(name)
         keys = liquid_keys or list(
             layout.get("zorder_by") or layout.get("cluster_by") or ()
@@ -3749,7 +3756,6 @@ class SnapshotStore:
                 self._commit(name, version, expected_version=expected, operation="OPTIMIZE")
             except ConcurrentWriteError as exc:
                 last_err = exc
-                shutil.rmtree(vdir, ignore_errors=True)
                 continue
             except Exception:
                 shutil.rmtree(vdir, ignore_errors=True)
@@ -3796,7 +3802,7 @@ class SnapshotStore:
         """Copy-on-write rewrite — the kernel under DELETE and UPDATE
         (Delta/Iceberg COW semantics): only files that CONTAIN a
         matching row are rewritten; every untouched file is HARDLINKED
-        into the new version (zero data movement), and the pointer
+        into the new version (zero data movement), and the log
         commit flips readers atomically.
 
         Touched files are discovered by Spark itself: one filtered
@@ -4010,7 +4016,6 @@ class SnapshotStore:
                 last_err = exc
                 self._abort_cdc(name, cdc_fut)
                 self._abort_validation(val_fut)
-                shutil.rmtree(vdir, ignore_errors=True)
                 continue
             except ConstraintViolationError:
                 # Same as merge (ADVICE r12): a COW UPDATE that mints

@@ -268,7 +268,12 @@ def run_available_now(
     so both ``awaitTermination()`` and ``processAllAvailable()`` block
     indefinitely. We instead poll until at least one trigger has
     committed and the source reports no unprocessed data — the
-    batch-equivalent point — then stop."""
+    batch-equivalent point — then stop.
+
+    Raises ``TimeoutError`` if that point is not reached within
+    ``timeout_s`` (a plan that keeps a trigger active, such as the
+    sentinel-flushed sessionizer, needs
+    ``run_available_now_stateful``)."""
     import time
 
     q = (
@@ -280,7 +285,7 @@ def run_available_now(
     )
     try:
         deadline = time.time() + timeout_s
-        while q.isActive and time.time() < deadline:
+        while q.isActive:
             status = q.status
             if (
                 q.lastProgress is not None
@@ -288,6 +293,11 @@ def run_available_now(
                 and not status["isTriggerActive"]
             ):
                 break
+            if time.time() >= deadline:
+                raise TimeoutError(
+                    f"run_available_now({sink_name!r}): not drained "
+                    f"after {timeout_s}s"
+                )
             time.sleep(0.1)
     finally:
         q.stop()

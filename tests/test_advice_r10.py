@@ -125,7 +125,7 @@ def test_overwrite_negative_step_advances_hwm(spark, wh):
 
 def test_table_changes_refuses_underived_dv_commit(spark, wh):
     store = SnapshotStore(
-        spark, wh, retain_versions=3, delta_log=True
+        spark, wh, retain_versions=3
     )  # cdf=False
     store.overwrite("t", spark.range(0, 30).select(F.col("id").alias("k")))
     store.delete_where_mor("t", "k % 3 = 0")  # DV commit, no cdc actions
@@ -138,7 +138,7 @@ def test_table_changes_refuses_underived_dv_commit(spark, wh):
 
 
 def test_vanished_staged_cdc_fails_commit_loudly(spark, wh):
-    store = SnapshotStore(spark, wh, delta_log=True, cdf=True)
+    store = SnapshotStore(spark, wh, cdf=True)
     store.overwrite("t", spark.range(0, 10).select(F.col("id").alias("k")))
     staged = spark.range(0, 3).select(
         F.col("id").alias("k"), F.lit("delete").alias("_change_type")
@@ -154,7 +154,7 @@ def test_vanished_staged_cdc_fails_commit_loudly(spark, wh):
 
 
 def test_vacuum_cdc_grace_spares_fresh_staged_files(spark, wh):
-    store = SnapshotStore(spark, wh, delta_log=True, cdf=True)
+    store = SnapshotStore(spark, wh, cdf=True)
     store.overwrite("t", spark.range(0, 20).select(F.col("id").alias("k")))
     store.delete_where("t", "k < 5")
     tdir = store.path("t")

@@ -43,8 +43,7 @@ def wh():
 # ---------------------------------------------------------------- 1
 class TestMergeMorDuplicateLiveKeys:
     def _dup_store(self, spark, wh, row_tracking: bool):
-        store = SnapshotStore(spark, wh, retain_versions=10,
-                              delta_log=True)
+        store = SnapshotStore(spark, wh, retain_versions=10)
         store.overwrite(
             "t",
             spark.createDataFrame(
@@ -90,8 +89,7 @@ class TestMergeMorDuplicateLiveKeys:
 # ---------------------------------------------------------------- 2
 class TestWideningUnderColumnMapping:
     def test_rename_then_widen_stays_readable(self, spark, wh):
-        store = SnapshotStore(spark, wh, retain_versions=10,
-                              delta_log=True)
+        store = SnapshotStore(spark, wh, retain_versions=10)
         store.overwrite(
             "t",
             spark.range(0, 40).select(
@@ -110,8 +108,7 @@ class TestWideningUnderColumnMapping:
         assert df.agg(F.sum("amount")).collect()[0][0] == sum(range(40))
 
     def test_widen_then_rename_other_column(self, spark, wh):
-        store = SnapshotStore(spark, wh, retain_versions=10,
-                              delta_log=True)
+        store = SnapshotStore(spark, wh, retain_versions=10)
         store.overwrite(
             "t",
             spark.range(0, 30).select(
@@ -132,8 +129,7 @@ class TestWideningUnderColumnMapping:
 # ---------------------------------------------------------------- 3
 class TestRowTrackedReadDelta:
     def test_physical_id_columns_hidden_and_deterministic(self, spark, wh):
-        store = SnapshotStore(spark, wh, retain_versions=10,
-                              delta_log=True)
+        store = SnapshotStore(spark, wh, retain_versions=10)
         store.overwrite(
             "t",
             spark.range(0, 50).select(
@@ -158,8 +154,7 @@ class TestRowTrackedReadDelta:
 # ---------------------------------------------------------------- 4
 class TestCleanupLogAllForms:
     def test_superseded_versions_lose_every_form(self, spark, wh):
-        store = SnapshotStore(spark, wh, retain_versions=10,
-                              delta_log=True)
+        store = SnapshotStore(spark, wh, retain_versions=10)
         store.overwrite("t", spark.range(0, 20).select(
             F.col("id").alias("k")))
         store.append("t", spark.range(20, 30).select(

@@ -39,7 +39,7 @@ def _base(spark, n=40):
 def store(spark):
     shutil.rmtree(WH, ignore_errors=True)
     yield SnapshotStore(
-        spark, WH, retain_versions=20, delta_log=True, cdf=True
+        spark, WH, retain_versions=20, cdf=True
     )
     shutil.rmtree(WH, ignore_errors=True)
 
@@ -79,7 +79,7 @@ def test_async_stage_feed_identical_to_inline(spark, store):
     sync_wh = WH + "_sync"
     shutil.rmtree(sync_wh, ignore_errors=True)
     st2 = SnapshotStore(
-        spark, sync_wh, retain_versions=20, delta_log=True, cdf=True
+        spark, sync_wh, retain_versions=20, cdf=True
     )
     orig = SnapshotStore._stage_cdc_async
     try:

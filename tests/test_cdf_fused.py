@@ -24,7 +24,7 @@ WH = "/tmp/pa_test_cdf_fused_wh"
 def store(spark):
     shutil.rmtree(WH, ignore_errors=True)
     yield SnapshotStore(
-        spark, WH, retain_versions=20, delta_log=True, cdf=True
+        spark, WH, retain_versions=20, cdf=True
     )
     shutil.rmtree(WH, ignore_errors=True)
 

@@ -35,7 +35,7 @@ WH = "/tmp/pa_test_cp_v2_wh"
 @pytest.fixture()
 def store(spark):
     shutil.rmtree(WH, ignore_errors=True)
-    s = SnapshotStore(spark, WH, retain_versions=10, delta_log=True)
+    s = SnapshotStore(spark, WH, retain_versions=10)
     yield s
     shutil.rmtree(WH, ignore_errors=True)
 

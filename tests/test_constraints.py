@@ -35,7 +35,7 @@ def _base(spark, n=30):
 @pytest.fixture()
 def store(spark):
     shutil.rmtree(WH, ignore_errors=True)
-    yield SnapshotStore(spark, WH, retain_versions=5, delta_log=True)
+    yield SnapshotStore(spark, WH, retain_versions=5)
     shutil.rmtree(WH, ignore_errors=True)
 
 

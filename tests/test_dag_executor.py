@@ -166,6 +166,32 @@ class TestExecutorParity:
         total_keys = customers_cdc.select("customer_id").distinct().count()
         assert expected < total_keys  # the assertion above is non-vacuous
 
+    def test_empty_first_batch_then_data(self, spark, tmp_path):
+        """A model first materialized from an empty batch (a partitioned
+        write with no rows leaves its version without a data file) reads
+        back as an empty table with the log's schema, and later runs
+        build on it instead of failing to infer a schema."""
+        customers_cdc, orders_cdc = make_cdc_frames(spark)
+        reg = build_registry(AS_OF, AS_OF_TS)
+        store = SnapshotStore(spark, str(tmp_path / "wh"))
+        ex = DagExecutor(reg, store, threads=5)
+        _, ledger1 = ex.run(
+            {"customers_cdc": customers_cdc.limit(0), "orders_cdc": orders_cdc}
+        )
+        assert [e["error"] for e in ledger1] == [None, None, None]
+        dim0 = store.read("dim_customer")
+        assert dim0.count() == 0 and "country" in dim0.columns
+
+        _, ledger2 = ex.run(
+            {"customers_cdc": customers_cdc, "orders_cdc": orders_cdc}
+        )
+        assert [e["error"] for e in ledger2] == [None, None, None]
+        dim = store.read("dim_customer")
+        assert set(dim.columns) == set(dim0.columns)
+        n_customers = store.read("customers_latest").count()
+        assert n_customers > 0
+        assert dim.count() == n_customers
+
     def test_ledger_df_schema(self, spark, tmp_path):
         reg = build_registry(AS_OF, AS_OF_TS)
         store = SnapshotStore(spark, str(tmp_path / "wh"))

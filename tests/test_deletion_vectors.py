@@ -114,7 +114,7 @@ class TestCodec:
 class TestDeltaLogDV:
     def _store(self, spark, tmp_path):
         store = SnapshotStore(
-            spark, str(tmp_path / "wh"), delta_log=True, retain_versions=4
+            spark, str(tmp_path / "wh"), retain_versions=4
         )
         df = spark.range(400).selectExpr(
             "id AS k", "CAST(id % 4 AS STRING) AS p", "id * 2 AS v"
@@ -212,7 +212,7 @@ class TestDeltaLogDV:
 
     def test_pruned_read_applies_dv(self, spark, tmp_path):
         store = SnapshotStore(
-            spark, str(tmp_path / "wh2"), delta_log=True
+            spark, str(tmp_path / "wh2")
         )
         df = spark.range(1000).selectExpr("id AS k", "id % 10 AS v")
         store.overwrite("t", df, cluster_by=("k",), n_files=8)

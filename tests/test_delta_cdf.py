@@ -49,7 +49,7 @@ def _base(spark, n=60):
 def store(spark):
     shutil.rmtree(WH, ignore_errors=True)
     yield SnapshotStore(
-        spark, WH, retain_versions=20, delta_log=True, cdf=True
+        spark, WH, retain_versions=20, cdf=True
     )
     shutil.rmtree(WH, ignore_errors=True)
 
@@ -64,9 +64,11 @@ def _counts(spark, tdir, start=0, end=None):
     }
 
 
-def test_cdf_requires_delta_log(spark):
+def test_delta_log_false_is_refused(spark):
+    # every store commits through _delta_log; there is no log-less mode
     with pytest.raises(ValueError, match="delta_log"):
-        SnapshotStore(spark, WH, cdf=True)
+        SnapshotStore(spark, WH, cdf=True, delta_log=False)
+    assert SnapshotStore(spark, WH, cdf=True).cdf
 
 
 def test_cdf_full_dml_lifecycle(spark, store):
@@ -234,7 +236,7 @@ def test_cdf_occ_race_discards_stale_stage(spark, store):
 def test_cdf_below_retention_raises(spark):
     shutil.rmtree(WH, ignore_errors=True)
     st = SnapshotStore(
-        spark, WH, retain_versions=1, delta_log=True, cdf=True
+        spark, WH, retain_versions=1, cdf=True
     )
     st.overwrite("t", _base(spark, 10))
     st.overwrite("t", _base(spark, 8))

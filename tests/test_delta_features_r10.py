@@ -49,7 +49,7 @@ def _base(spark, n=80):
 class TestCdfColumnMapping:
     def test_rename_mid_feed_served_logically(self, spark, wh):
         store = SnapshotStore(
-            spark, wh, retain_versions=8, delta_log=True, cdf=True
+            spark, wh, retain_versions=8, cdf=True
         )
         store.overwrite("t", _base(spark))                      # v0
         store.delete_where("t", "k % 4 = 0")                    # v1
@@ -75,7 +75,7 @@ class TestCdfColumnMapping:
 
     def test_range_before_rename_uses_old_logical_names(self, spark, wh):
         store = SnapshotStore(
-            spark, wh, retain_versions=8, delta_log=True, cdf=True
+            spark, wh, retain_versions=8, cdf=True
         )
         store.overwrite("t", _base(spark))
         tdir = store.path("t")
@@ -92,8 +92,7 @@ class TestStreamColumnMapping:
             register_delta_tail,
         )
 
-        store = SnapshotStore(spark, wh, retain_versions=8,
-                              delta_log=True)
+        store = SnapshotStore(spark, wh, retain_versions=8)
         store.overwrite("t", _base(spark, 40))
         tdir = store.path("t")
         dl.enable_column_mapping(tdir)
@@ -132,7 +131,7 @@ class TestStreamColumnMapping:
 
 class TestInCommitTimestamps:
     def test_enable_clamp_and_resolve(self, spark, wh):
-        store = SnapshotStore(spark, wh, delta_log=True)
+        store = SnapshotStore(spark, wh)
         store.overwrite("t", _base(spark))                      # v0
         tdir = store.path("t")
         v = dl.enable_in_commit_timestamps(tdir)                # v1
@@ -153,7 +152,7 @@ class TestInCommitTimestamps:
         assert log.version_at_timestamp(500) == 0
 
     def test_idempotent(self, spark, wh):
-        store = SnapshotStore(spark, wh, delta_log=True)
+        store = SnapshotStore(spark, wh)
         store.overwrite("t", _base(spark))
         tdir = store.path("t")
         dl.enable_in_commit_timestamps(tdir)
@@ -164,8 +163,7 @@ class TestInCommitTimestamps:
 
 class TestTypeWidening:
     def _build(self, spark, wh):
-        store = SnapshotStore(spark, wh, retain_versions=8,
-                              delta_log=True)
+        store = SnapshotStore(spark, wh, retain_versions=8)
         store.overwrite(
             "t",
             spark.range(0, 60).select(
@@ -224,8 +222,7 @@ class TestTypeWidening:
 
 class TestLiquidClustering:
     def test_set_optimize_and_checkpoint_roundtrip(self, spark, wh):
-        store = SnapshotStore(spark, wh, retain_versions=8,
-                              delta_log=True)
+        store = SnapshotStore(spark, wh, retain_versions=8)
         store.overwrite(
             "t",
             spark.range(0, 4000).select(
@@ -260,7 +257,7 @@ class TestLiquidClustering:
         assert snap3.clustering_columns() == ["v"]
 
     def test_unknown_column_refused(self, spark, wh):
-        store = SnapshotStore(spark, wh, delta_log=True)
+        store = SnapshotStore(spark, wh)
         store.overwrite("t", _base(spark))
         with pytest.raises(dl.DeltaProtocolError, match="not in schema"):
             dl.set_clustering(store.path("t"), ["nope"])

@@ -1,5 +1,5 @@
 """Delta transaction-log protocol tests (sources/delta_log.py + the
-SnapshotStore ``delta_log=True`` integration).
+SnapshotStore log-commit integration).
 
 The reference materializes with ``file_format: delta``
 (dbt_project.yml:39); this suite certifies the pure-Python log:
@@ -411,7 +411,7 @@ class TestConvertAndRetention:
 
     def test_cleanup_log_and_vacuum_preserve_head(self, spark, tmp_path):
         store = SnapshotStore(
-            spark, str(tmp_path / "wh"), retain_versions=2, delta_log=True
+            spark, str(tmp_path / "wh"), retain_versions=2
         )
         store.overwrite("t", spark.range(120).selectExpr("id AS k"))
         for i in range(1, 11):  # v1..v10, checkpoint at v9
@@ -434,7 +434,7 @@ class TestConvertAndRetention:
 
     def test_cleanup_log_noop_without_checkpoint(self, spark, tmp_path):
         store = SnapshotStore(
-            spark, str(tmp_path / "wh2"), delta_log=True
+            spark, str(tmp_path / "wh2")
         )
         store.overwrite("t", spark.range(5).selectExpr("id AS k"))
         log = DeltaLog(store.path("t"))
@@ -449,7 +449,7 @@ def test_checksum_written_and_validates(spark, tmp_path):
     from product_analytics_spark.sources.sinks import SnapshotStore
 
     wh = str(tmp_path / "wh")
-    st = SnapshotStore(spark, wh, retain_versions=5, delta_log=True)
+    st = SnapshotStore(spark, wh, retain_versions=5)
     df = spark.range(0, 30).selectExpr("id AS k", "id * 2 AS v")
     st.overwrite("t", df)
     st.append("t", spark.range(30, 40).selectExpr("id AS k", "id * 2 AS v"))
@@ -469,7 +469,7 @@ def test_checksum_tamper_raises(spark, tmp_path):
     from product_analytics_spark.sources.sinks import SnapshotStore
 
     wh = str(tmp_path / "wh")
-    st = SnapshotStore(spark, wh, retain_versions=5, delta_log=True)
+    st = SnapshotStore(spark, wh, retain_versions=5)
     st.overwrite("t", spark.range(0, 10).selectExpr("id AS k"))
     log = dl.DeltaLog(st.path("t"))
     import json as _json
@@ -486,7 +486,7 @@ def test_cleanup_log_removes_crc_sidecars(spark, tmp_path):
     from product_analytics_spark.sources.sinks import SnapshotStore
 
     wh = str(tmp_path / "wh")
-    st = SnapshotStore(spark, wh, retain_versions=15, delta_log=True)
+    st = SnapshotStore(spark, wh, retain_versions=15)
     st.overwrite("t", spark.range(0, 5).selectExpr("id AS k"))
     for i in range(11):  # cross the checkpoint interval
         st.append(

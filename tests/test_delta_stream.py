@@ -34,7 +34,7 @@ def _mk(spark, lo, hi):
 @pytest.fixture()
 def store(spark):
     shutil.rmtree(WH, ignore_errors=True)
-    yield SnapshotStore(spark, WH, retain_versions=10, delta_log=True)
+    yield SnapshotStore(spark, WH, retain_versions=10)
     shutil.rmtree(WH, ignore_errors=True)
 
 
@@ -128,7 +128,7 @@ def test_stream_change_feed_matches_table_changes(spark, store):
     table_changes feed — same cdc files, same derivation rules."""
     shutil.rmtree(WH + "_cdf", ignore_errors=True)
     st = SnapshotStore(
-        spark, WH + "_cdf", retain_versions=10, delta_log=True, cdf=True
+        spark, WH + "_cdf", retain_versions=10, cdf=True
     )
     try:
         st.overwrite("t", _mk(spark, 0, 30), partition_by=("p",))
@@ -169,7 +169,7 @@ def test_stream_change_feed_matches_table_changes(spark, store):
 
 
 def test_stream_cdf_dv_without_cdc_raises(spark, store):
-    st = store  # delta_log=True, cdf=False
+    st = store  # cdf=False
     st.overwrite("t", _mk(spark, 0, 10))
     st.delete_where_mor("t", "k = 0")  # DV commit, no cdc files
     reader = DeltaTailStreamReader(

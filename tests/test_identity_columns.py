@@ -37,7 +37,7 @@ def _rows(spark, lo, hi):
 @pytest.fixture()
 def store(spark):
     shutil.rmtree(WH, ignore_errors=True)
-    yield SnapshotStore(spark, WH, retain_versions=5, delta_log=True)
+    yield SnapshotStore(spark, WH, retain_versions=5)
     shutil.rmtree(WH, ignore_errors=True)
 
 
@@ -99,7 +99,7 @@ def test_hwm_survives_store_restart(spark, store):
     st.overwrite("t", _rows(spark, 0, 10))
     hwm = st.identity_columns("t")["sk"]["high_water_mark"]
     assert hwm is not None and hwm >= 10
-    st2 = SnapshotStore(spark, WH, retain_versions=5, delta_log=True)
+    st2 = SnapshotStore(spark, WH, retain_versions=5)
     st2.append("t", _rows(spark, 10, 15))
     ids = [r["sk"] for r in st2.read("t").collect()]
     assert len(set(ids)) == 15, "no id reuse after restart"

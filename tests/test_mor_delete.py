@@ -97,13 +97,13 @@ class TestMorDelete:
         assert store.read("t", version=2).count() == 400
 
     def test_mor_with_delta_log_emits_descriptors(self, spark, tmp_path):
-        # round 9 lifted the old gate: MoR under delta_log=True now
+        # round 9 lifted the old gate: MoR through the delta log now
         # emits protocol-v3 deletionVector descriptors (deep coverage
         # in tests/test_deletion_vectors.py)
         from product_analytics_spark.sources import delta_log as dl
 
         store = SnapshotStore(
-            spark, str(tmp_path / "wh"), delta_log=True
+            spark, str(tmp_path / "wh")
         )
         store.overwrite("t", _base(spark))
         store.delete_where_mor("t", "k = 1")

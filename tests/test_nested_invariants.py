@@ -35,7 +35,7 @@ def _base(spark, n=20):
 @pytest.fixture()
 def store(spark):
     shutil.rmtree(WH, ignore_errors=True)
-    s = SnapshotStore(spark, WH, retain_versions=5, delta_log=True)
+    s = SnapshotStore(spark, WH, retain_versions=5)
     yield s
     shutil.rmtree(WH, ignore_errors=True)
 

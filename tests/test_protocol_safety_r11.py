@@ -38,7 +38,7 @@ def wh():
 
 
 def _dv_table(spark, wh):
-    store = SnapshotStore(spark, wh, retain_versions=8, delta_log=True)
+    store = SnapshotStore(spark, wh, retain_versions=8)
     store.overwrite(
         "t",
         spark.range(0, 40).select(
@@ -121,8 +121,7 @@ def _is_live_sidecar(tdir, p, snap):
 
 class TestCheckpointProtection:
     def test_protected_history_survives_cleanup(self, spark, wh):
-        store = SnapshotStore(spark, wh, retain_versions=8,
-                              delta_log=True)
+        store = SnapshotStore(spark, wh, retain_versions=8)
         store.overwrite(
             "t", spark.range(0, 30).select(F.col("id").alias("k"))
         )
@@ -156,8 +155,7 @@ class TestCheckpointProtection:
         assert dl.read_delta(spark, tdir).count() == 45
 
     def test_without_feature_cleanup_is_aggressive(self, spark, wh):
-        store = SnapshotStore(spark, wh, retain_versions=8,
-                              delta_log=True)
+        store = SnapshotStore(spark, wh, retain_versions=8)
         store.overwrite(
             "t", spark.range(0, 10).select(F.col("id").alias("k"))
         )
@@ -251,8 +249,7 @@ class TestCommitOwnerFuzz:
 
 class TestUniversalReaderRule:
     def test_unknown_reader_feature_unreadable(self, spark, wh):
-        store = SnapshotStore(spark, wh, retain_versions=8,
-                              delta_log=True)
+        store = SnapshotStore(spark, wh, retain_versions=8)
         store.overwrite(
             "t", spark.range(0, 10).select(F.col("id").alias("k"))
         )
@@ -366,7 +363,7 @@ class TestStoreCommitOwner:
         version the store commits."""
         owner = dl.FileRegistryCommitOwner()
         store = SnapshotStore(
-            spark, wh, retain_versions=8, delta_log=True,
+            spark, wh, retain_versions=8,
             commit_owner=owner,
         )
         store.overwrite(
@@ -388,8 +385,7 @@ class TestStoreCommitOwner:
         # a second store WITHOUT the owner still interoperates (same
         # log format; the hardlink owner just doesn't consult the
         # registry — single-filesystem deployments may mix)
-        store2 = SnapshotStore(spark, wh, retain_versions=8,
-                               delta_log=True)
+        store2 = SnapshotStore(spark, wh, retain_versions=8)
         store2.append(
             "t", spark.range(30, 35).select(F.col("id").alias("k"))
         )

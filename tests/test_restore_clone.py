@@ -39,7 +39,7 @@ def _base(spark, n=40):
 def store(spark):
     shutil.rmtree(WH, ignore_errors=True)
     shutil.rmtree(CLONE, ignore_errors=True)
-    yield SnapshotStore(spark, WH, retain_versions=10, delta_log=True)
+    yield SnapshotStore(spark, WH, retain_versions=10)
     shutil.rmtree(WH, ignore_errors=True)
     shutil.rmtree(CLONE, ignore_errors=True)
 

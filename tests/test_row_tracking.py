@@ -37,7 +37,7 @@ WH = "/tmp/pa_test_rowtracking_wh"
 @pytest.fixture()
 def store(spark):
     shutil.rmtree(WH, ignore_errors=True)
-    s = SnapshotStore(spark, WH, retain_versions=10, delta_log=True)
+    s = SnapshotStore(spark, WH, retain_versions=10)
     yield s
     shutil.rmtree(WH, ignore_errors=True)
 
@@ -86,12 +86,17 @@ class TestEnablement:
         store.enable_row_tracking("t")
         assert dl.DeltaLog(store.path("t")).latest_version() == v1
 
-    def test_requires_delta_log(self, spark):
+    def test_default_store_enables_row_tracking(self, spark):
+        # every store writes the log, so row tracking needs no opt-in;
+        # the flag lives in the log's configuration, not a marker file
         shutil.rmtree(WH + "2", ignore_errors=True)
         s = SnapshotStore(spark, WH + "2")
         s.overwrite("t", _base(spark))
-        with pytest.raises(ValueError, match="delta_log"):
-            s.enable_row_tracking("t")
+        assert not s._row_tracking("t")
+        s.enable_row_tracking("t")
+        assert s._row_tracking("t")
+        assert s.delta_snapshot("t").row_tracking_enabled()
+        assert s.read("t").columns == _base(spark).columns
         shutil.rmtree(WH + "2", ignore_errors=True)
 
 
@@ -245,7 +250,7 @@ class TestRowTrackingWithCdf:
         shutil.rmtree(wh, ignore_errors=True)
         try:
             store = SnapshotStore(
-                spark, wh, retain_versions=10, delta_log=True, cdf=True
+                spark, wh, retain_versions=10, cdf=True
             )
             store.overwrite("t", _base(spark), n_files=3)
             store.enable_row_tracking("t")

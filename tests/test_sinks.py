@@ -794,8 +794,8 @@ class TestOptimizeRecluster:
 
 
 class TestCommitLogGc:
-    """Round-8: the commit log truncates to the retention window
-    (Delta log-cleanup analog), GC deletes only previously COMMITTED
+    """Round-8: retained versions truncate to the retention window
+    (Delta VACUUM analog), GC deletes only previously COMMITTED
     versions, and a concurrent writer's uncommitted dir survives
     another writer's commit (the old every-v_-dir sweep destroyed the
     last writer's data under unchecked concurrency); crashed writers'
@@ -805,12 +805,14 @@ class TestCommitLogGc:
         store = SnapshotStore(spark, str(tmp_path / "wh"), retain_versions=2)
         for i in range(5):
             store.overwrite("t", spark.range(i + 1).selectExpr("id AS k"))
-        log = store._log_path("t")
-        with open(log, encoding="utf-8") as fh:
-            lines = [ln for ln in fh if ln.strip()]
-        assert len(lines) == 2  # retention window, not 5
-        assert len(store.versions("t")) == 2
+        vs = store.versions("t")
+        assert len(vs) == 2  # retention window, not 5
+        assert vs[-1] == store.current_version("t")
+        on_disk = [e for e in os.listdir(store.path("t")) if e.startswith("v_")]
+        assert sorted(on_disk) == sorted(vs)  # older versions GC'd
         assert store.read("t", version=0).count() == 4  # time travel intact
+        assert store.read("t", version=vs[0]).count() == 4
+        assert store.read("t", version=-1).count() == 5
 
     def test_inflight_writer_dir_survives_concurrent_commit(
         self, spark, tmp_path

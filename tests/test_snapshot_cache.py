@@ -30,7 +30,7 @@ def wh():
 
 
 def _mk(spark, wh, n=40):
-    store = SnapshotStore(spark, wh, retain_versions=10, delta_log=True)
+    store = SnapshotStore(spark, wh, retain_versions=10)
     store.overwrite(
         "t", spark.range(0, n).select(F.col("id").alias("k"))
     )
@@ -85,7 +85,7 @@ def test_recreated_table_never_aliases(spark, wh):
     assert dl.read_delta(spark, tdir).count() == 40
     # destroy and rebuild the SAME path with different content
     shutil.rmtree(wh, ignore_errors=True)
-    store2 = SnapshotStore(spark, wh, retain_versions=10, delta_log=True)
+    store2 = SnapshotStore(spark, wh, retain_versions=10)
     store2.overwrite(
         "t", spark.range(0, 7).select(F.col("id").alias("k"))
     )
@@ -136,8 +136,7 @@ def test_mutation_canary_across_dml_lifecycle(spark, wh):
     path mutates a cached add in place."""
     import json as _json
 
-    store = SnapshotStore(spark, WH, retain_versions=10,
-                          delta_log=True)
+    store = SnapshotStore(spark, WH, retain_versions=10)
     store.overwrite("t", spark.range(0, 40).select(
         F.col("id").alias("k"),
         (F.col("id") % 4).cast("string").alias("p"),

@@ -134,7 +134,7 @@ def test_cdf_stream_respects_cap(spark):
     wh = "/tmp/pa_test_ratelimit_cdf"
     shutil.rmtree(wh, ignore_errors=True)
     store = SnapshotStore(spark, wh, retain_versions=10,
-                          delta_log=True, cdf=True)
+                          cdf=True)
     store.overwrite(
         "t", spark.range(0, 20).select(F.col("id").alias("k"))
     )

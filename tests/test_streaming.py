@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from product_analytics_spark import streaming as st
 from product_analytics_spark.catalog import read_parquet
 from product_analytics_spark.operators import windows
+from product_analytics_spark.streaming import ops
 from tests.conftest import SF_SMALL
 
 
@@ -128,7 +129,9 @@ class TestStatefulSessionizer:
         stream = st.sessionize_stateful(
             st.stream_table(spark, src, schema), gap_minutes=30
         )
-        st.run_available_now(stream, "stateful_sink", output_mode="append")
+        ops.run_available_now_stateful(
+            stream, "stateful_sink", output_mode="append"
+        )
         out = spark.table("stateful_sink").collect()
         assert len(out) == 1
         (s,) = out
